@@ -32,6 +32,9 @@ def flag_init(
 
     ``chan`` is the global fine-channel index; fine position within its
     coarse band = chan % fine_per_coarse. Pure predicates — no shuffle.
+    The first/last times are each observation's own when ``vis`` has an
+    ``obsid`` column (one eager grouped min/max query), else the
+    frame's; ``n_times`` fixes them at 0 and n_times - 1 instead.
     """
     fine = F.col("chan") % F.lit(fine_per_coarse)
     edge = (fine < F.lit(edge_width)) | (
@@ -39,14 +42,18 @@ def flag_init(
     )
     centre = fine == F.lit(fine_per_coarse // 2)
     pred = edge | centre
-    if n_times is None:
-        bounds = vis.agg(
-            F.min("time_idx").alias("lo"), F.max("time_idx").alias("hi")
-        ).first()
-        lo, hi = bounds["lo"], bounds["hi"]
+    t = F.col("time_idx")
+    if n_times is not None:
+        pred = pred | (t == F.lit(0)) | (t == F.lit(n_times - 1))
     else:
-        lo, hi = 0, n_times - 1
-    pred = pred | (F.col("time_idx") == F.lit(lo)) | (F.col("time_idx") == F.lit(hi))
+        obs = ["obsid"] if "obsid" in vis.columns else []
+        for b in vis.groupBy(*obs).agg(
+            F.min("time_idx").alias("lo"), F.max("time_idx").alias("hi")
+        ).collect():
+            ends = (t == F.lit(b["lo"])) | (t == F.lit(b["hi"]))
+            if obs:
+                ends = F.col("obsid").eqNullSafe(b["obsid"]) & ends
+            pred = pred | ends
     return vis.withColumn("flag", F.col("flag") | pred)
 
 

@@ -6,14 +6,13 @@ statistic; config surface reference configurators.py:86-97, math in the
 pinned SSINS dependency). Flagged cells are excluded from the mean.
 
 z-score (SSINS ``metric_ms``) standardizes INS across time per
-(chan, pol) — computed as group-agg + broadcast rejoin rather than a
-window so the per-group stats are one hash aggregation (the group count
-Nchan x Npol is tiny; the rejoin broadcasts).
+(chan, pol), computed as window aggregates over the tiny INS table
+(Ntimes x Nchan x Npol rows per observation).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from mwa_uvdata_pipeline_spark.functions.complexnum import c_abs
@@ -55,7 +54,6 @@ def zscore(
     value_col: str = "ins",
     part_keys: tuple[str, ...] = ("chan", "pol"),
     method: str = "mad",
-    strategy: str = "join",
 ) -> DataFrame:
     """A6: per-(chan, pol) standardization of INS across time.
 
@@ -66,58 +64,25 @@ def zscore(
     estimate). ``method="std"`` keeps the classic mean/stddev z.
     Degenerate groups (zero scale) get z=0 so thresholds stay defined.
 
-    Two physical strategies, identical results (pinned by
-    test_round9.py): ``"join"`` runs hash aggs + broadcast rejoins —
-    each stats pass is its own broadcast-build job, fine when the INS
-    table is consumed once; ``"window"`` computes the same stats as
-    window aggregates over one partitioning — ONE exchange, no
-    broadcast builds, the latency-light shape for chained pipelines
-    (the E2E lifecycle entry: 6 broadcast builds over a 5k-row table
-    cost more than the 705k-row archive scan).
+    The stats are window aggregates over ``part_keys``: one exchange
+    (none when the input is already clustered on a prefix of the keys,
+    see :func:`pipeline.ssins_flags`) and no broadcast builds, each of
+    which would re-run the plan below INS back to the archive scan.
     """
-    keys = list(part_keys)
-    if strategy == "window":
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(*part_keys)
-        if method == "std":
-            out = ins.withColumn("_loc", F.avg(value_col).over(w)).withColumn(
-                "_scale", F.stddev_samp(value_col).over(w)
-            )
-        else:
-            out = ins.withColumn(
-                "_loc", F.median(value_col).over(w)
-            ).withColumn(
-                "_scale",
-                F.median(F.abs(F.col(value_col) - F.col("_loc"))).over(w)
-                * F.lit(_MAD_TO_SIGMA),
-            )
-        z = F.when(
-            F.col("_scale").isNull() | (F.col("_scale") == 0.0), F.lit(0.0)
-        ).otherwise((F.col(value_col) - F.col("_loc")) / F.col("_scale"))
-        z = F.when(
-            F.col(value_col).isNull(), F.lit(None).cast("double")
-        ).otherwise(z)
-        return out.withColumn("z", z).drop("_loc", "_scale")
+    w = Window.partitionBy(*part_keys)
     if method == "std":
-        stats = ins.groupBy(*part_keys).agg(
-            F.avg(value_col).alias("_loc"),
-            F.stddev_samp(value_col).alias("_scale"),
+        out = ins.withColumn("_loc", F.avg(value_col).over(w)).withColumn(
+            "_scale", F.stddev_samp(value_col).over(w)
         )
-        joined = ins.join(F.broadcast(stats), keys, "left")
     else:
-        med = ins.groupBy(*part_keys).agg(F.median(value_col).alias("_loc"))
-        with_med = ins.join(F.broadcast(med), keys, "left")
-        mad = (
-            with_med.groupBy(*part_keys)
-            .agg(F.median(F.abs(F.col(value_col) - F.col("_loc"))).alias("_mad"))
-            .withColumn("_scale", F.col("_mad") * F.lit(_MAD_TO_SIGMA))
-            .drop("_mad")
+        out = ins.withColumn("_loc", F.median(value_col).over(w)).withColumn(
+            "_scale",
+            F.median(F.abs(F.col(value_col) - F.col("_loc"))).over(w)
+            * F.lit(_MAD_TO_SIGMA),
         )
-        joined = with_med.join(F.broadcast(mad), keys, "left")
     z = F.when(
         F.col("_scale").isNull() | (F.col("_scale") == 0.0), F.lit(0.0)
     ).otherwise((F.col(value_col) - F.col("_loc")) / F.col("_scale"))
     # fully-flagged cells have NULL ins → NULL z (flows through as "no evidence")
     z = F.when(F.col(value_col).isNull(), F.lit(None).cast("double")).otherwise(z)
-    return joined.withColumn("z", z).drop("_loc", "_scale")
+    return out.withColumn("z", z).drop("_loc", "_scale")

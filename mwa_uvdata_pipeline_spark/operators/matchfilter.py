@@ -7,18 +7,20 @@ Pipeline over the z-scored INS table:
 2. streak  — per (time, pol) mean z over channels; |mean| > streak
    flags the whole time row (broadband RFI);
 3. tb_aggro — if the flagged fraction of channels at a time exceeds
-   tb_aggro, flag the entire time (W4 agg-and-rejoin pattern).
+   tb_aggro, flag the entire time (W4).
 
-Everything is hash aggs + broadcast rejoins on the tiny INS table
-(Ntimes x Nchan x Npol rows) — the heavy lifting happened upstream in
-the INS aggregation, so the match filter costs ~nothing at any scale.
+Every per-time statistic is a window aggregate on the tiny INS table
+(Ntimes x Nchan x Npol rows), not a hash agg + broadcast rejoin: each
+broadcast build is its own Spark job that re-runs the plan below INS
+back to the archive scan (that form took about 11 s of an 18 s
+two-observation SSINS run on 4 cores).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -36,7 +38,6 @@ def match_filter(
     ins_z: DataFrame,
     cfg: MatchFilterConfig | None = None,
     obs_keys: tuple[str, ...] = (),
-    strategy: str = "join",
 ) -> DataFrame:
     """Return the INS table with boolean columns ``narrow_flag``,
     ``streak_flag``, ``tb_flag`` and the OR-combined ``mf_flag``.
@@ -57,47 +58,11 @@ def match_filter(
     narrow = F.coalesce(F.abs(F.col("z")) > F.lit(cfg.narrow), F.lit(False))
     df = ins_z.withColumn("narrow_flag", narrow)
 
-    if strategy == "window":
-        # same statistics as window aggregates — per-time partitions,
-        # no broadcast-build jobs (see zscore docstring; equivalence
-        # pinned by test_round9.py)
-        from pyspark.sql import Window
-
-        w_tp = Window.partitionBy(*ok, "time_idx", "pol")
-        w_t = Window.partitionBy(*ok, "time_idx")
-        df = df.withColumn(
-            "streak_flag",
-            F.coalesce(
-                F.abs(F.avg("z").over(w_tp)) > F.lit(cfg.streak),
-                F.lit(False),
-            ),
-        )
-        cell_flagged = (
-            (F.col("flag_occupancy") > F.lit(0.5))
-            | F.col("narrow_flag")
-            | F.col("streak_flag")
-        )
-        df = df.withColumn(
-            "tb_flag",
-            F.avg(cell_flagged.cast("double")).over(w_t)
-            > F.lit(cfg.tb_aggro),
-        )
-        return df.withColumn(
-            "mf_flag",
-            F.col("narrow_flag") | F.col("streak_flag") | F.col("tb_flag"),
-        )
-
     # streak: per (time, pol) mean z across all channels
-    streak_times = (
-        df.groupBy(*ok, "time_idx", "pol")
-        .agg(F.avg("z").alias("_mean_z"))
-        .where(F.abs(F.col("_mean_z")) > F.lit(cfg.streak))
-        .select(*ok, "time_idx", "pol", F.lit(True).alias("streak_flag"))
-    )
-    df = df.join(
-        F.broadcast(streak_times), [*ok, "time_idx", "pol"], "left"
-    ).withColumn(
-        "streak_flag", F.coalesce(F.col("streak_flag"), F.lit(False))
+    w_tp = Window.partitionBy(*ok, "time_idx", "pol")
+    df = df.withColumn(
+        "streak_flag",
+        F.coalesce(F.abs(F.avg("z").over(w_tp)) > F.lit(cfg.streak), F.lit(False)),
     )
 
     # time-broadcast: occupancy of (pre-existing OR new) flags per time
@@ -106,19 +71,13 @@ def match_filter(
         | F.col("narrow_flag")
         | F.col("streak_flag")
     )
-    df = df.withColumn("_cell_flagged", cell_flagged)
-    tb_times = (
-        df.groupBy(*ok, "time_idx")
-        .agg(F.avg(F.col("_cell_flagged").cast("double")).alias("_occ"))
-        .where(F.col("_occ") > F.lit(cfg.tb_aggro))
-        .select(*ok, "time_idx", F.lit(True).alias("tb_flag"))
-    )
-    df = df.join(F.broadcast(tb_times), [*ok, "time_idx"], "left").withColumn(
-        "tb_flag", F.coalesce(F.col("tb_flag"), F.lit(False))
+    w_t = Window.partitionBy(*ok, "time_idx")
+    df = df.withColumn(
+        "tb_flag", F.avg(cell_flagged.cast("double")).over(w_t) > F.lit(cfg.tb_aggro)
     )
     return df.withColumn(
         "mf_flag", F.col("narrow_flag") | F.col("streak_flag") | F.col("tb_flag")
-    ).drop("_cell_flagged")
+    )
 
 
 def apply_flags_to_vis(vis: DataFrame, mf: DataFrame) -> DataFrame:

@@ -5170,7 +5170,7 @@ def decode_scene_cuts(docs: DataFrame, threshold: int = 16,
 
     ``nf_for`` (doc_id -> frame count) overrides the default
     2 + doc_id % 7 video length — the skew-probe hook for the
-    one-long-video scenario (tools/skew_probe9.py): frames of one doc
+    one-long-video scenario (SCALE.md, round 9): frames of one doc
     are decoded as a SERIAL fold in one task (state = one previous
     luminance), so wall time is lower-bounded by the longest single
     video; frame-level parallelism would need a keyed reshuffle with

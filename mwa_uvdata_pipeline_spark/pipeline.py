@@ -8,9 +8,11 @@ remove_flagged_ants=True, flag_choice=None. ``run_check`` has no
 equivalent — schema-on-read replaces pyuvdata's O(data) consistency
 scan (configurators.py:224,261).
 
-Everything here is lazy plan construction; Catalyst fuses the predicate
-stages into the scan and the whole chain runs as two shuffles (the diff
-window and the INS aggregation) regardless of how many options are on.
+Everything here is lazy plan construction except ``flag_init``'s one
+eager min/max query. Catalyst fuses the predicate stages into the scan;
+the chain then runs three shuffles over ONE scan of the visibilities:
+the diff window, the INS aggregation, and the ``obsid`` repartition
+that every post-INS window rides on (see :func:`ssins_flags`).
 """
 
 from __future__ import annotations
@@ -84,6 +86,24 @@ def ss_read(
     return df
 
 
+def ssins_flags(ins: DataFrame, mf: MatchFilterConfig | None = None) -> DataFrame:
+    """z-score → match filter over an INS table, per observation when
+    ``ins`` carries ``obsid``.
+
+    The INS table is hashed on ``obsid`` alone: every post-INS window —
+    z-score (obsid, chan, pol), streak (obsid, time_idx, pol), tb
+    (obsid, time_idx) — is clustered on an obsid-prefixed key, which
+    HashPartitioning(obsid) satisfies, so the whole chain runs on ONE
+    tiny exchange with no broadcast builds. obsid is also the scale-out
+    unit (observations are independent).
+    """
+    obs = ("obsid",) if "obsid" in ins.columns else ()
+    if obs:
+        ins = ins.repartition(*obs)
+    z = zscore(ins, part_keys=(*obs, "chan", "pol"))
+    return match_filter(z, mf, obs_keys=obs)
+
+
 def ssins_pipeline(
     vis: DataFrame,
     cfg: PipelineConfig | None = None,
@@ -91,8 +111,14 @@ def ssins_pipeline(
 ) -> DataFrame:
     """Flagship query (SURVEY.md §7 phase 1): read-chain → INS →
     z-score → match filter. Returns the per-(time, chan, pol) flag
-    table with narrow/streak/time-broadcast verdicts."""
+    table with narrow/streak/time-broadcast verdicts, prefixed by
+    ``obsid`` when the input has it (each observation is filtered on
+    its own statistics)."""
     cfg = cfg or PipelineConfig()
     d = ss_read(vis, cfg.read, cfg.select, antenna_dim)
-    ins = incoherent_noise_spectrum(d, spectrum_type=cfg.select.spectrum_type)
-    return match_filter(zscore(ins), cfg.mf)
+    obs = ("obsid",) if "obsid" in d.columns else ()
+    ins = incoherent_noise_spectrum(
+        d, spectrum_type=cfg.select.spectrum_type,
+        group_keys=(*obs, "time_idx", "chan", "pol"),
+    )
+    return ssins_flags(ins, cfg.mf)

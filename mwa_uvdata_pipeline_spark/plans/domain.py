@@ -20,9 +20,10 @@ from pyspark.sql import functions as F
 
 from mwa_uvdata_pipeline_spark.operators.diff import time_diff
 from mwa_uvdata_pipeline_spark.operators.flags import flag_init
-from mwa_uvdata_pipeline_spark.operators.ins import incoherent_noise_spectrum, zscore
-from mwa_uvdata_pipeline_spark.operators.matchfilter import MatchFilterConfig, match_filter
+from mwa_uvdata_pipeline_spark.operators.ins import incoherent_noise_spectrum
+from mwa_uvdata_pipeline_spark.operators.matchfilter import MatchFilterConfig
 from mwa_uvdata_pipeline_spark.operators.select import SelectOptions, apply_select
+from mwa_uvdata_pipeline_spark.pipeline import ssins_flags
 from mwa_uvdata_pipeline_spark.plans import register
 
 FIXTURE_DIR = Path(__file__).resolve().parents[2] / "fixtures"
@@ -149,7 +150,7 @@ def d_mf_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     ins = incoherent_noise_spectrum(d, spectrum_type="cross").withColumn(
         "ins", F.round("ins", 9)
     )
-    mf = match_filter(zscore(ins), MatchFilterConfig())
+    mf = ssins_flags(ins, MatchFilterConfig())
     return mf.select(
         "time_idx", "chan", "pol", "narrow_flag", "streak_flag", "tb_flag", "mf_flag"
     )
@@ -1052,32 +1053,16 @@ def d_e2e_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("ins", F.round("ins", 9))
         # INS is the collapse point (Ntimes x Nchan x Npol x Nobs rows
-        # — MBs from 100 TB); persist it so the z-score/match-filter
-        # self-joins re-read THIS table, not the binary archive scan
-        # (without it the Python-DataSource read + diff re-executes
-        # ~5x: med, mad, streak, tb, and the final agg)
+        # — MBs from 100 TB); persist it so a further action over this
+        # plan re-reads THIS table, not the Python-DataSource archive
+        # scan + diff
         .persist()
     )
-    # hash the cached INS on obsid alone: every post-INS requirement —
-    # the zscore windows (obsid, chan, pol), the streak window
-    # (obsid, time_idx, pol), the tb window (obsid, time_idx) and the
-    # final (obsid, pol) aggregate — is ClusteredDistribution on an
-    # obsid-prefixed key, and HashPartitioning(obsid) satisfies them
-    # ALL (subset rule), so the whole match-filter chain runs on ONE
-    # tiny exchange instead of four sequential ones. The repartition
-    # sits ABOVE the cache because an AQE-planned InMemoryRelation
-    # hides its output partitioning from consumers (EnsureRequirements
-    # would re-shuffle anyway). obsid is also the 100 TB scale-out
-    # unit (observations are independent), so the shape is not a
-    # local[32] trick.
-    z = zscore(
-        ins.repartition("obsid"),
-        part_keys=("obsid", "chan", "pol"),
-        strategy="window",
-    )
-    mf = match_filter(
-        z, MatchFilterConfig(), obs_keys=("obsid",), strategy="window"
-    )
+    # the repartition(obsid) inside ssins_flags sits ABOVE the cache:
+    # an AQE-planned InMemoryRelation hides its output partitioning from
+    # consumers, so the post-INS windows would re-shuffle anyway; the
+    # final (obsid, pol) aggregate rides the same obsid hashing
+    mf = ssins_flags(ins, MatchFilterConfig())
     return mf.groupBy("obsid", "pol").agg(
         F.count(F.lit(1)).cast("long").alias("n_cells"),
         F.sum(F.col("narrow_flag").cast("int")).cast("long").alias("n_narrow"),

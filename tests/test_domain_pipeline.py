@@ -112,6 +112,24 @@ def test_zscore_matches_numpy(spark_mf, numpy_mf):
     assert np.allclose(z_sp, z_np, equal_nan=True, atol=1e-9)
 
 
+def test_zscore_std_matches_numpy(vis):
+    """method="std": per-(chan, pol) mean / sample std (ddof=1) of the
+    same INS values in numpy; NULL INS stays NULL, a zero or undefined
+    scale gives z=0."""
+    ins = incoherent_noise_spectrum(time_diff(vis), spectrum_type="cross")
+    pdf = zscore(ins, method="std").select("chan", "pol", "ins", "z").toPandas()
+    assert len(pdf) == (T - 1) * C * P
+    for _, g in pdf.groupby(["chan", "pol"]):
+        v = g["ins"].dropna().to_numpy()
+        scale = v.std(ddof=1) if len(v) > 1 else 0.0
+        for x, z in zip(g["ins"], g["z"]):
+            if np.isnan(x):
+                assert np.isnan(z)
+            else:
+                want = 0.0 if scale == 0 else (x - v.mean()) / scale
+                assert z == pytest.approx(want, rel=1e-12, abs=1e-12)
+
+
 def test_narrow_flags_match_and_hit_plants(spark_mf, numpy_mf):
     narrow_np = numpy_mf[2]
     narrow_sp = _cube(spark_mf, "narrow_flag").astype(bool)

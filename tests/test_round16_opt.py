@@ -257,10 +257,19 @@ def test_dedup_semantic_pins_pair_join_parallelism(spark):
     """The exact-cosine pair joins must ride AQE-uncoalescible keyed
     repartitions (hash(va)/hash(vb) at defaultParallelism): AQE sizes
     coalesce off the candidate shuffle's 16-byte rows, but the join
-    output carries two 64-dim vectors per pair."""
+    output carries two 64-dim vectors per pair. Read from the optimized
+    logical plan after clearing the cache, so a frame cached by another
+    test cannot stand in for the pinned subtree."""
     from mwa_uvdata_pipeline_spark.plans import load_all
+    from tests.plan_shape import node_name, optimized_plan, plan_nodes, seq
 
+    spark.catalog.clearCache()
     df = load_all()["dedup_semantic"].spark(spark, SF_SMALL)
-    plan = _executed_plan(df)
-    assert "hashpartitioning(va#" in plan and "hashpartitioning(vb#" in plan
-    assert plan.count("REPARTITION_BY_NUM") >= 2
+    par = spark.sparkContext.defaultParallelism
+    keyed = [
+        ([e.name() for e in seq(n.partitionExpressions())],
+         n.optNumPartitions().isDefined() and n.numPartitions())
+        for n in plan_nodes(optimized_plan(df))
+        if node_name(n) == "RepartitionByExpression"
+    ]
+    assert (["va"], par) in keyed and (["vb"], par) in keyed
